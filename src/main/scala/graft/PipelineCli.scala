@@ -16,6 +16,7 @@ import graft.tiling.TileJobs
   * images.parquet: D4 rows whose image_id equals the listing entry names;
   * masks.parquet: D5 rows; one centerline (maskId) serves all pairs, like
   * the reference's single river mask (main_code.py:50).
+  * Prints one line per stage (E1, E2, E3): its output rows and wall time.
   */
 object PipelineCli {
   def main(args: Array[String]): Unit = {
@@ -37,6 +38,7 @@ object PipelineCli {
     spark.sparkContext.setLogLevel("WARN")
 
     // E1 — catalogs
+    val t0 = System.nanoTime()
     val (edge, n) = WeekBins.Ref2023
     val sCat = CatalogBuilder.build(spark.read.textFile(s2Listing).toDF("data"),
       DateParse.s2AcqDate, "S2", edge, n)
@@ -48,13 +50,16 @@ object PipelineCli {
       .option("header", true).csv(s"$outDir/L_catalog")
 
     // E2 — pair table (native array form), placeholders excluded for the
-    // physical phase (a "0" row has no image)
-    val pairs = Pairing.pathsPair(lCat, sCat, includePlaceholders = false)
-    pairs.write.mode("overwrite").parquet(s"$outDir/path_pair")
+    // physical phase (a "0" row has no image). It reads E1's plan: the
+    // written CSV parts do not keep the catalog row order its keys follow.
+    val t1 = System.nanoTime()
+    Pairing.pathsPair(lCat, sCat, includePlaceholders = false)
+      .write.mode("overwrite").parquet(s"$outDir/path_pair")
 
-    // E3 — explode pairs to (pair_id, hr, lr, mask) and tile. data_1/data_2
-    // carry "<path>/<name>"; image ids are the bare names.
-    val pairTable = pairs
+    // E3 — explode the written pairs to (pair_id, hr, lr, mask) and tile.
+    // data_1/data_2 carry "<path>/<name>"; image ids are the bare names.
+    val t2 = System.nanoTime()
+    val pairTable = spark.read.parquet(s"$outDir/path_pair")
       .select(col("data_1"), explode(col("data_2")).as("data_2"))
       .select(
         concat(element_at(split(col("data_1"), "/"), -1), lit("|"),
@@ -67,9 +72,16 @@ object PipelineCli {
     val tiles = TileJobs.tilePairs(assembled, TileJobs.Config(batch, scale))
     tiles.write.mode("overwrite").parquet(s"$outDir/tiles")
 
-    val nPairs = pairTable.count()
-    val nTiles = spark.read.parquet(s"$outDir/tiles").count()
-    println(s"pairs=$nPairs tiles=$nTiles")
+    val t3 = System.nanoTime()
+
+    // rows are counted from the written outputs, not by rebuilding lineage
+    def secs(from: Long, to: Long) = (to - from) / 1e9
+    def csvRows(dir: String) = spark.read.option("header", true).csv(s"$outDir/$dir").count()
+    val pairs = spark.read.parquet(s"$outDir/path_pair")
+    println(f"E1 catalogs: S=${csvRows("S_catalog")} L=${csvRows("L_catalog")} rows, ${secs(t0, t1)}%.2f s")
+    println(f"E2 pair table: ${pairs.count()} keys, " +
+      f"${pairs.select(explode(col("data_2"))).count()} pairs, ${secs(t1, t2)}%.2f s")
+    println(f"E3 tiles: ${spark.read.parquet(s"$outDir/tiles").count()} tiles, ${secs(t2, t3)}%.2f s")
     spark.stop()
   }
 }

@@ -21,27 +21,14 @@ import graft.functions.Base26
   *   - order rows by (bin, name) — reproducing the reference's sorted-name
   *     row order exactly (main_function_original.py:38–48).
   *
-  * Scale note: the catalog is a per-sensor file listing (thousands–millions of
-  * rows at most). The only shuffle is the groupBy(bin) histogram; the bin/label
-  * dimension (53 rows here, bounded by #weeks in the range) is broadcast back
-  * onto the listing, so the labeling window function runs on the tiny bin
-  * table, never on the full listing.
+  * Scale note: the listing may hold millions of rows, but the label dimension
+  * is bounded by nBins (53 weeks here). `build` runs ONE eager job: the
+  * groupBy(bin) of the non-empty bins, collected and lettered on the driver.
+  * The listing reads its class from that literal `bin → class` map and the
+  * empty bins' placeholders are a local relation: no join, no window, and
+  * the listing's only shuffle is the final (bin, name) sort.
   */
 object CatalogBuilder {
-
-  /** Labeled bin dimension: (bin, bin_start, cnt, class). */
-  def labeledBins(dates: DataFrame, dateCol: String, firstEdge: LocalDate, nBins: Int): DataFrame = {
-    val hist = WeekBins.histogram(dates, dateCol, firstEdge, nBins)
-    // Rank of each non-empty bin among non-empty bins, in bin order, via the
-    // bounded no-window rank over the ≤ nBins dimension (never an
-    // unpartitioned WindowExec), broadcast-joined back onto the bin table.
-    val ranked = graft.ops.Ranking.boundedRank(
-      hist.where(col("cnt") > 0).select("bin"), "nonEmptyRank", col("bin"))
-    hist.join(broadcast(ranked), Seq("bin"), "left")
-      .withColumn("class",
-        when(col("cnt") > 0, Base26.base26(col("nonEmptyRank"))).otherwise(lit("0")))
-      .select("bin", "bin_start", "cnt", "class")
-  }
 
   /** Build one sensor catalog.
     *
@@ -59,12 +46,18 @@ object CatalogBuilder {
       .withColumn("bin", WeekBins.weekIndex(col("date"), firstEdge, nBins))
       .where(col("bin").isNotNull) // np.histogram drops out-of-range dates
 
-    val bins = labeledBins(dated, "date", firstEdge, nBins)
+    // the one eager job: the non-empty bins, lettered in bin order
+    val nonEmpty = dated.select("bin").distinct().collect().map(_.getInt(0)).sorted
+    val classOf = nonEmpty.zipWithIndex.map { case (b, i) =>
+      b -> Base26.letters(i + 1L).toString
+    }.toMap
 
-    val filled = dated.join(broadcast(bins.select("bin", "class")), Seq("bin"))
-      .select(col("class"), lit(path).as("path"), col("data"), col("date"), col("bin"))
+    val filled = dated
+      .select(typedLit(classOf).apply(col("bin")).as("class"), lit(path).as("path"),
+        col("data"), col("date"), col("bin"))
 
-    val placeholders = bins.where(col("cnt") === 0)
+    val placeholders = names.sparkSession
+      .createDataFrame((0 until nBins).filterNot(classOf.contains).map(Tuple1(_))).toDF("bin")
       .select(lit("0").as("class"), lit(path).as("path"), lit("0").as("data"),
         lit(null).cast("date").as("date"), col("bin"))
 

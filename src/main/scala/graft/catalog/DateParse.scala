@@ -24,9 +24,10 @@ object DateParse {
     * year `yyyy` + ordinal day-of-year `DDD`. Implemented arithmetically
     * (Jan 1 + DDD - 1); a regex guard makes malformed names NULL instead of
     * an ANSI cast error (CaseWhen evaluates branches lazily, so the casts
-    * never see non-digit input). */
+    * never see non-digit input), and `get` makes a name with fewer than four
+    * fields NULL instead of an ANSI index error. */
   def hlsAcqDate(name: Column): Column = {
-    val f = split(name, "\\.").getItem(3)
+    val f = get(split(name, "\\."), lit(3))
     // ordinal day 001–366 only (366 on a non-leap year rolls into Jan 1 of
     // the next year via date_add — no such name exists in real archives)
     val valid = f.rlike("^\\d{4}(00[1-9]|0[1-9]\\d|[12]\\d\\d|3[0-5]\\d|36[0-6])")

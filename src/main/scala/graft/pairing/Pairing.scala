@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   *   - every L row creates its key even with zero matches (left join,
   *     `collect_list` drops the unmatched NULL → empty array);
   *   - duplicate L paths (the `"0"` placeholder rows) collapse to ONE key at
-  *     their first-occurrence position;
+  *     their first-occurrence position, holding the matches of their last
+  *     assignment;
   *   - `data_2` order = S row order; within one class the S catalog is
   *     already name-sorted, so `sort_array` reproduces it deterministically
   *     under parallel collection.
@@ -29,43 +30,26 @@ object Pairing {
 
   /** Pair table (data_1 STRING, data_2 ARRAY<STRING>) in L-row order.
     * `includePlaceholders=false` filters `class != "0"` first (sane mode,
-    * quirk Q2). */
-  /** Materialized 0-based row index in the DataFrame's CURRENT row order —
-    * `rdd.zipWithIndex` pins (partition-ordinal, intra-partition position)
-    * at materialization time, so the index survives any later plan
-    * rewrites (AQE re-partitioning, join reordering) that would make
-    * `monotonically_increasing_id`-after-`orderBy` fragile. The RDD hop is
-    * deliberate and cheap here: pathsPair inputs are catalog-sized. */
-  private[pairing] def withRowIndex(df: DataFrame, name: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(
-        name, org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (row, i) =>
-      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ i)
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
-
+    * quirk Q2).
+    * Dict order is `monotonically_increasing_id()` over the L input as given
+    * (partitions in order, rows in order within each), inside the plan: no
+    * eager job. One aggregation per key keeps its FIRST position (`min`) and
+    * the matches of its LAST assignment (`_idx = max(_idx)`). */
   def pathsPair(l: DataFrame, s: DataFrame, includePlaceholders: Boolean = true): DataFrame = {
     val filt: DataFrame => DataFrame =
       df => if (includePlaceholders) df else df.where(col("class") =!= "0")
-    // Row index to reproduce dict insertion order (materialized — see
-    // withRowIndex).
-    // Dict assignment semantics for duplicate L paths (the placeholder rows):
-    // the key sits at its FIRST-occurrence position but holds the matches of
-    // its LAST assignment — so dedupe to one row per key before the join
-    // (min(_idx) for order, max_by(class, _idx) for the winning class).
-    val lp = withRowIndex(filt(l), "_idx")
-      .select(col("class"), joined(col("path"), col("data")).as("data_1"), col("_idx"))
-      .groupBy("data_1")
-      .agg(min("_idx").as("_ord"), max_by(col("class"), col("_idx")).as("class"))
+    val lp = filt(l)
+      .select(col("class"), joined(col("path"), col("data")).as("data_1"),
+        monotonically_increasing_id().as("_idx"))
     val sp = filt(s)
       .select(col("class"), joined(col("path"), col("data")).as("s_path"))
     lp.join(broadcast(sp), Seq("class"), "left")
-      .groupBy("data_1", "_ord")
-      .agg(sort_array(collect_list("s_path")).as("data_2"))
+      .groupBy("data_1")
+      .agg(min("_idx").as("_ord"), max("_idx").as("_last"),
+        collect_list(when(col("s_path").isNotNull, struct(col("_idx"), col("s_path")))).as("_m"))
       .orderBy("_ord")
-      .select("data_1", "data_2")
+      .select(col("data_1"), sort_array(transform(
+        filter(col("_m"), m => m("_idx") === col("_last")), m => m("s_path"))).as("data_2"))
   }
 
   /** Python `repr(list[str])` of an array column — the faithful `data_2` CSV

@@ -276,15 +276,16 @@ object TilingQueries {
     // keep producing them. Every md5 aggregates a sort_array'd row list,
     // so it is independent of partitioning and arrival order.
     //
-    // Bench price (~3.8 s/rep): intrinsic to composing six stage branches
-    // over two catalog sub-plans — each branch re-derives its inputs
-    // (Spark does no cross-branch CSE) and each catalog build is ~8 tiny
-    // exchanges. Checkpoint-materializing the 114-row catalogs was tried
-    // and does NOT help (the builds themselves are the floor, the
-    // re-reads were never the cost); the scalar metrics join the plan
-    // lazily instead of via driver collects. One eager job remains at
-    // construction: Pairing.pathsPair's rdd.zipWithIndex computes its
-    // partition offsets with sc.runJob (catalog-sized, documented there).
+    // Bench price: intrinsic to composing six stage branches over two
+    // catalog sub-plans — each branch re-derives its inputs (Spark does no
+    // cross-branch CSE). Each catalog sub-plan is a scan of the names plus
+    // one sort; the pair dict adds one aggregation and one sort.
+    // Checkpoint-materializing the 114-row catalogs was tried and does NOT
+    // help (the builds themselves are the floor, the re-reads were never
+    // the cost); the scalar metrics join the plan lazily instead of via
+    // driver collects. Two eager jobs remain at construction, one per
+    // CatalogBuilder.build: its ≤ 53-row bin aggregate, collected to
+    // letter the weeks (documented there).
     "q101_e3_pipeline" -> ((s, _) => {
       // the ONE registry row whose input lives outside the data dir by
       // design: its job is pinning the dataflow against the reference's

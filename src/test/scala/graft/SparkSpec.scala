@@ -14,6 +14,20 @@ trait SparkSpec extends AnyFunSuite {
     * repeated bench/verify/test invocations had piled up hundreds of
     * orphan dirs in /tmp); every spec call site routes through here. */
   def tempDir(prefix: String): java.nio.file.Path = SparkSpec.tempDir(prefix)
+
+  /** One labelled session maker per physical configuration: shuffle
+    * partitions 1, 4 and 7, each with AQE on and off. Each session shares the
+    * suite's SparkContext under its own SQL conf. Output must not depend on
+    * either setting. */
+  def configMatrix: Seq[(String, () => SparkSession)] =
+    for (parts <- Seq(1, 4, 7); aqe <- Seq(true, false)) yield {
+      s"shuffle.partitions=$parts, AQE=${if (aqe) "on" else "off"}" -> { () =>
+        val s = spark.newSession()
+        s.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+        s.conf.set("spark.sql.adaptive.enabled", aqe)
+        s
+      }
+    }
 }
 
 object SparkSpec {
